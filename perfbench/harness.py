@@ -6,11 +6,12 @@ A workload object provides:
 
 * ``name`` and ``op_kinds`` (the op kinds whose latencies form the
   workload's op distribution);
-* ``warmup_passes``: untimed passes before the timed ones (the first
-  pass of a run is the checked one either way);
+* ``warmup_passes``: untimed passes before the timed ones, at least
+  one (the first pass of a run is the checked one);
 * ``make_inputs(seed, data_dir) -> int`` (bytes of user data written)
   and ``setup(spark, data_dir)`` (loads the inputs); both are part of
-  every set-up and so of ``setup_s``;
+  every set-up and so of ``setup_s``, which also counts the start of
+  the set-up's own JVM and Spark session;
 * optionally ``prepare_checks(spark)``: expected outputs, computed once
   after set-up and never timed;
 * ``run_pass(spark, ctx) -> PassResult``: one closed-loop pass, each op
@@ -30,7 +31,11 @@ import time
 from dataclasses import dataclass, field
 
 CPUS = 4
-SETUP_REPS = 3
+# set-ups per run, each in a fresh JVM; setup_s is their median
+SETUP_REPS = 2
+# timed passes per run at least, whatever ``--seconds`` says; run_s and
+# cpu_s are medians over them
+MIN_TIMED_PASSES = 2
 
 
 @dataclass
@@ -61,6 +66,8 @@ class PassContext:
     scratch: str
     tracer: object | None = None
     root: object | None = None  # the traced pass span, once timed_region ran
+    cpu_s: float = 0.0  # CPU seconds of this process tree in the timed region
+    steal: float = 0.0  # share of the machine's CPU time stolen meanwhile
 
     def span(self, name: str, **attrs):
         if self.tracer is None:
@@ -71,9 +78,13 @@ class PassContext:
     def timed_region(self):
         """Brackets the part of a pass that ``run_s`` times; in a traced
         pass it is the root span (checks after it are not traced)."""
+        cpu0, steal0 = tree_cpu_s(), host_steal()
         with self.span("pass") as root:
             self.root = root
             yield root
+        cpu1, steal1 = tree_cpu_s(), host_steal()
+        self.cpu_s = cpu1 - cpu0
+        self.steal = (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1])
 
 
 # --- isolation ----------------------------------------------------------------
@@ -134,21 +145,81 @@ def spark_conf(paths: dict[str, str], ui: bool) -> dict[str, str]:
 
 
 def stop_jvm(timeout: float = 30.0) -> None:
-    """End the py4j gateway JVM this process launched and wait for it:
-    it exits when its stdin closes."""
+    """End the py4j gateway JVM this process launched and wait for it
+    (it exits when its stdin closes). The next ``get_spark`` in this
+    process launches a fresh JVM."""
     import subprocess
 
     from pyspark import SparkContext
 
-    proc = getattr(SparkContext._gateway, "proc", None)
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
     if proc is None:
         return
     try:
+        gateway.close()
         proc.stdin.close()
         proc.wait(timeout=timeout)
     except (OSError, subprocess.TimeoutExpired):
         proc.kill()
         proc.wait()
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+
+
+# --- processes ----------------------------------------------------------------
+
+def _procs() -> dict[int, tuple[str, list[str]]]:
+    """pid -> (command name, the /proc stat fields after the name)."""
+    out = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                raw = fh.read()
+        except OSError:
+            continue
+        rp = raw.rfind(")")
+        out[int(d)] = (raw[raw.find("(") + 1: rp], raw[rp + 2:].split())
+    return out
+
+
+def _tree(procs: dict, root: int) -> list[int]:
+    """``root`` and every process descended from it."""
+    kids: dict[int, list[int]] = {}
+    for pid, (_, fields) in procs.items():
+        kids.setdefault(int(fields[1]), []).append(pid)
+    out, todo = [], [root]
+    while todo:
+        p = todo.pop()
+        out.append(p)
+        todo.extend(kids.get(p, []))
+    return out
+
+
+def jvm_pids() -> list[int]:
+    """Java processes descended from this one (the py4j gateway JVM)."""
+    procs = _procs()
+    return [p for p in _tree(procs, os.getpid()) if procs.get(p, ("",))[0] == "java"]
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants (the
+    JVM, Python workers), children they reaped included."""
+    procs = _procs()
+    ticks = sum(
+        sum(int(x) for x in procs[p][1][11:15]) for p in _tree(procs, os.getpid())
+    )
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def host_steal() -> tuple[int, int]:
+    """(stolen, total) CPU ticks of the whole machine so far: time the
+    hypervisor gave the machine's CPUs to other guests."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    return f[7], sum(f)
 
 
 # --- memory -------------------------------------------------------------------
@@ -162,32 +233,6 @@ def _rss_kb(pid: int) -> int:
     except OSError:
         pass
     return 0
-
-
-def jvm_pids() -> list[int]:
-    """Java processes descended from this one (the py4j gateway JVM)."""
-    me = os.getpid()
-    parents: dict[int, int] = {}
-    names: dict[int, str] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as fh:
-                raw = fh.read()
-        except OSError:
-            continue
-        rp = raw.rfind(")")
-        names[int(d)] = raw[raw.find("(") + 1: rp]
-        parents[int(d)] = int(raw[rp + 2:].split()[1])
-    out = []
-    for pid, name in names.items():
-        p, hops = pid, 0
-        while p in parents and p != me and hops < 8:
-            p, hops = parents[p], hops + 1
-        if p == me and name == "java":
-            out.append(pid)
-    return out
 
 
 class RssSampler:

@@ -107,6 +107,21 @@ def _stages_in(spans: list[dict], stages: list[dict]) -> list[dict]:
     return [g for g in stages if g["id"] in ids]
 
 
+def _thread_self_sum(root: dict, body: list[dict]) -> float:
+    """Self times of the spans on the pass's own thread, each counting
+    only children on that thread (pool-thread spans of
+    ``run_overlapped`` run concurrently with each other and are part of
+    their caller's time). With properly nested spans this is the pass
+    wall; an overlap or a child outside its parent makes it larger."""
+    own = [root] + [s for s in body if s["thread"] == root["thread"]]
+    kids: dict[int, list[tuple[float, float]]] = {}
+    for s in own[1:]:
+        kids.setdefault(s["parent"], []).append((s["t0"], s["t1"]))
+    return sum(
+        s["wall_s"] - union_length(kids.get(s["id"], []), s["t0"], s["t1"]) for s in own
+    )
+
+
 def pass_metrics(workload: str, spans: list[dict], root: dict, jobs: list[dict],
                  stages: list[dict], extra: dict) -> tuple[dict, list[str]]:
     """({metric: value}, missing expected span names) for one pass."""
@@ -209,7 +224,7 @@ def pass_metrics(workload: str, spans: list[dict], root: dict, jobs: list[dict],
     put("serving.source_fingerprint", fn("serving.source_fingerprint"), with_jobs=False)
 
     m["trace.coverage"] = 1.0 - root["self_s"] / root["wall_s"] if root["wall_s"] else 0.0
-    m["trace.self_sum_frac"] = (root["self_s"] + _sum(body, "self_s")) / root["wall_s"]
+    m["trace.self_sum_frac"] = _thread_self_sum(root, body) / root["wall_s"]
 
     missing = []
     for want in EXPECTED_SPANS.get(workload, ()):

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload kmeans_sweep --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload kmeans_sweep --seed 1 --seconds 5 --trace 0
 
 Runs one workload closed-loop with one client on ``local[4]`` against
 the engine in the checkout this file sits in, and prints one JSON
@@ -12,19 +12,25 @@ With ``--trace 0`` the metrics are the end-to-end metrics of
 BENCHMARK.json; with ``--trace 1`` the per-layer ones, from passes run
 with spans on, alternated with passes run with spans off for the
 tracing overhead. The line before it is a ``{"detail": ...}`` object
-with everything else: workload-specific metrics (op tail, ingest and
-probe latency, space amplification, fail fraction), per-pass times,
-the host calibration and the warm-up record. A traced run also writes
+with everything else: every end-to-end figure under ``e2e`` (also
+``run_s``, op latency median and tail, ingest and probe latency, space
+amplification, fail fraction), per-pass times, the host calibration
+and the warm-up record. A traced run also writes
 its span trace to ``perfbench/out/trace-<workload>-seed<seed>.json``;
 ``perfbench/show_trace.py`` prints it.
 
 ``--workload all`` runs every workload, each in its own process, and
 prints every workload's metrics.
 
-Each run makes its inputs from ``--seed``, sets up ``SETUP_REPS``
-times (the first set-up starts the JVM, later ones restart the Spark
-context in it) and reports the median as ``setup_s``, warms up, then
-runs timed passes until ``--seconds`` have elapsed (at least one).
+Each run makes its inputs from ``--seed`` and sets up ``SETUP_REPS``
+times, each set-up in a JVM of its own (the previous one is stopped
+first, untimed), and reports the median as ``setup_s``. It then warms
+up and runs timed passes until ``--seconds`` have elapsed, at least
+``MIN_TIMED_PASSES`` of them, and reports their median wall time as
+``run_s`` and their median CPU time (this process, its JVM and their
+workers) as ``cpu_s``. Each pass also records the share of the
+machine's CPU time the hypervisor stole meanwhile, which is what moves
+wall times most on a shared virtual machine.
 All scratch state lives under ``perfbench/out/run-<pid>`` and is
 removed at exit.
 """
@@ -85,8 +91,6 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--points", type=int, default=None,
-                    help="kmeans_sweep distinct locations (the paper ran 22000)")
     args = ap.parse_args(argv)
 
     # the engine under test is the checkout's own copy, never an install

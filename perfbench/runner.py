@@ -9,17 +9,22 @@ import statistics
 import time
 
 import harness
-from harness import CPUS, SETUP_REPS, PassContext, RssSampler, log
+from harness import CPUS, MIN_TIMED_PASSES, SETUP_REPS, PassContext, RssSampler, log
+
+# The traced-pass self-check: named spans must cover this share of the
+# pass wall, and the self times on the pass's own thread must add up to
+# the wall within this relative error.
+MIN_COVERAGE = 0.9
+SELF_SUM_TOL = 0.01
 
 
 def make_workload(args):
     from ingest_serve import IngestServe
-    from kmeans_sweep import DEFAULT_POINTS, KMeansSweep
+    from kmeans_sweep import KMeansSweep
     from query_mix import QueryMix
 
-    if args.workload == "kmeans_sweep":
-        return KMeansSweep(args.points or DEFAULT_POINTS)
-    return {"query_mix": QueryMix, "ingest_serve": IngestServe}[args.workload]()
+    return {"kmeans_sweep": KMeansSweep, "query_mix": QueryMix,
+            "ingest_serve": IngestServe}[args.workload]()
 
 
 def _ops(passes, kinds) -> list[float]:
@@ -58,11 +63,13 @@ def run(args, contract, paths) -> tuple[dict, dict]:
     setup_s, get_spark_s = [], []
     try:
         for _ in range(SETUP_REPS):
-            t0 = time.perf_counter()
+            # every set-up is alike: a JVM of its own, and served
+            # artifacts built from scratch
             if spark is not None:
                 spark.stop()
-            # every set-up builds its served artifacts from scratch
+                harness.stop_jvm()
             harness.clear_dir(paths["warehouse"])
+            t0 = time.perf_counter()
             spark = get_spark(app_name=f"perfbench-{wl.name}", cpus=CPUS,
                               shuffle_partitions=CPUS, extra_conf=conf)
             get_spark_s.append(time.perf_counter() - t0)
@@ -91,24 +98,25 @@ def _measure(args, contract, paths, spark, wl, tracer, setup_s, get_spark_s, inp
         failed += r.failed
         failures.extend(r.failures)
 
-    warm, warm_ops = [], []
-    # a traced run compares traced with untraced passes, so both must
-    # come after a warm-up even where the workload times its first pass
-    for i in range(max(wl.warmup_passes, 1 if tracer is not None else 0)):
-        r = wl.run_pass(spark, PassContext(i, check=(i == 0), scratch=paths["state"]))
+    warm, warm_ops, warm_steal = [], [], []
+    for i in range(wl.warmup_passes):
+        ctx = PassContext(i, check=(i == 0), scratch=paths["state"])
+        r = wl.run_pass(spark, ctx)
         account(r)
         warm.append(r.wall_s)
+        warm_steal.append(ctx.steal)
         warm_ops.append([[kind, sec] for kind, sec in r.ops])
         log(f"{wl.name} warm-up {i}: {r.wall_s:.2f}s failed={r.failed}")
 
     plain, traced = [], []
+    plain_cpu, plain_steal = [], []
     t_start = time.perf_counter()
     with RssSampler() as rss:
         i = 0
         while True:
             on = tracer is not None and i % 2 == 1
-            ctx = PassContext(len(warm) + i, check=not warm and i == 0,
-                              scratch=paths["state"], tracer=tracer if on else None)
+            ctx = PassContext(len(warm) + i, check=False, scratch=paths["state"],
+                              tracer=tracer if on else None)
             if on:
                 tracer.reset()
                 tracer.enabled = True
@@ -125,10 +133,12 @@ def _measure(args, contract, paths, spark, wl, tracer, setup_s, get_spark_s, inp
                 traced.append((r, _collect_trace(spark, tracer, ctx, extra, wl.name)))
             else:
                 plain.append(r)
+                plain_cpu.append(ctx.cpu_s)
+                plain_steal.append(ctx.steal)
             log(f"{wl.name} pass {i}{' traced' if on else ''}: {r.wall_s:.2f}s failed={r.failed}")
             i += 1
             done = time.perf_counter() - t_start >= args.seconds
-            if done and plain and (tracer is None or traced):
+            if done and len(plain) >= MIN_TIMED_PASSES and (tracer is None or traced):
                 break
 
     # after the timed passes, so it reads the host, not the JVM's first jobs
@@ -137,6 +147,7 @@ def _measure(args, contract, paths, spark, wl, tracer, setup_s, get_spark_s, inp
     e2e = {
         "setup_s": statistics.median(setup_s),
         "run_s": statistics.median(r.wall_s for r in plain),
+        "cpu_s": statistics.median(plain_cpu),
         "op_p50_s": statistics.median(ops),
         "peak_rss_mb": rss.peak_kb / 1024.0,
     }
@@ -145,13 +156,15 @@ def _measure(args, contract, paths, spark, wl, tracer, setup_s, get_spark_s, inp
         "trace": args.trace, "local_cpus": CPUS,
         "setup_s_reps": setup_s, "get_spark_s_reps": get_spark_s,
         "warmup_passes": len(warm), "warmup_s": warm, "warmup_op_s": warm_ops,
-        "pass_s": [r.wall_s for r in plain], "ops": len(ops),
+        "warmup_steal": warm_steal,
+        "pass_s": [r.wall_s for r in plain], "pass_cpu_s": plain_cpu,
+        "pass_steal": plain_steal, "ops": len(ops),
         "op_s": [[[kind, sec] for kind, sec in r.ops] for r in plain],
         "calibration": calibration,
         "failures": failures[:20],
     }
     # every end-to-end figure with its unit; the contract's are a subset
-    units = {"setup_s": "s", "run_s": "s", "op_p50_s": "s", "peak_rss_mb": "MB"}
+    units = {"setup_s": "s", "run_s": "s", "cpu_s": "s", "op_p50_s": "s", "peak_rss_mb": "MB"}
     shown = {k: (v, units[k]) for k, v in e2e.items()}
     tail = harness.tail_percentile(ops)
     if tail is not None:
@@ -176,9 +189,9 @@ def _measure(args, contract, paths, spark, wl, tracer, setup_s, get_spark_s, inp
         missing = sorted({m for _, t in traced for m in t["missing_spans"]})
         detail["per_layer"] = layer
         detail["missing_spans"] = missing
-        if missing:
-            correct = False
-        if layer.get("execution.pins_after_clear", 0) != 0:
+        problems = trace_problems([t["metrics"] for _, t in traced])
+        detail["trace_problems"] = problems
+        if missing or problems:
             correct = False
         _write_trace(args, paths["out"], wl.name, detail, traced)
         values = layer
@@ -201,6 +214,21 @@ def result_line(contract: dict, values: dict, traced: bool, correct: bool,
             m["name"]: {"value": float(values[m["name"]]), "unit": m["unit"]} for m in wanted
         },
     }
+
+
+def trace_problems(pass_metrics: list[dict]) -> list[str]:
+    """What makes a traced run's figures untrustworthy: pins left after
+    ``clear_query_state``, too little of a pass under named spans, or
+    self times that do not add up to the pass wall."""
+    out = []
+    for i, m in enumerate(pass_metrics):
+        if m["execution.pins_after_clear"] != 0:
+            out.append(f"traced pass {i}: {m['execution.pins_after_clear']} pins after clear")
+        if m["trace.coverage"] < MIN_COVERAGE:
+            out.append(f"traced pass {i}: coverage {m['trace.coverage']:.3f} < {MIN_COVERAGE}")
+        if abs(m["trace.self_sum_frac"] - 1.0) > SELF_SUM_TOL:
+            out.append(f"traced pass {i}: self times sum to {m['trace.self_sum_frac']:.4f} of the wall")
+    return out
 
 
 def _mean_metrics(rows: list[dict]) -> dict:

@@ -3,13 +3,12 @@
     python3 perfbench/show_trace.py perfbench/out/trace-query_mix-seed1.json
     python3 perfbench/show_trace.py TRACE --op bm25_topk        # one query
     python3 perfbench/show_trace.py TRACE --op lloyd_2d:3       # 4th Lloyd call
-    python3 perfbench/show_trace.py TRACE --depth 2 --min-ms 50
 
 Columns: wall and self time (ms), Spark jobs and tasks launched while
 the span was open, and shuffle MB (read + write). ``--op NAME`` selects
 spans whose name ends with NAME or whose query is NAME; ``NAME:I``
-keeps the I-th match (0-based). Spans shorter than ``--min-ms`` are
-folded into a count line under their parent.
+keeps the I-th match (0-based). Each selected span is printed with its
+whole subtree.
 """
 
 from __future__ import annotations
@@ -35,8 +34,7 @@ def select(spans: list[dict], op: str | None) -> list[dict]:
     return hits
 
 
-def render(spans: list[dict], roots: list[dict], depth: int | None = None,
-           min_ms: float = 0.0) -> list[str]:
+def render(spans: list[dict], roots: list[dict]) -> list[str]:
     kids: dict[int, list[dict]] = {}
     for s in spans:
         if s["parent"] is not None:
@@ -53,18 +51,8 @@ def render(spans: list[dict], roots: list[dict], depth: int | None = None,
             f"{s['jobs']:5d} {s['tasks']:6d} "
             f"{s['shuffle_read_mb'] + s['shuffle_write_mb']:8.3f}"
         )
-        if depth is not None and level >= depth:
-            return
-        small = 0
-        small_ms = 0.0
         for c in sorted(kids.get(s["id"], []), key=lambda c: c["t0"]):
-            if c["wall_s"] * 1e3 < min_ms:
-                small += 1
-                small_ms += c["wall_s"] * 1e3
-                continue
             row(c, level + 1)
-        if small:
-            lines.append(f"{'  ' * (level + 1)}({small} spans under {min_ms:g} ms: {small_ms:.1f} ms)")
 
     for r in roots:
         row(r, 0)
@@ -77,8 +65,6 @@ def main(argv=None) -> int:
     ap.add_argument("--pass", dest="pass_no", type=int, default=0,
                     help="traced pass index (default 0)")
     ap.add_argument("--op", default=None)
-    ap.add_argument("--depth", type=int, default=None)
-    ap.add_argument("--min-ms", type=float, default=0.0)
     args = ap.parse_args(argv)
     with open(args.trace) as fh:
         trace = json.load(fh)
@@ -93,7 +79,7 @@ def main(argv=None) -> int:
         return 1
     print(f"# {trace['workload']} seed {trace['seed']} traced pass {args.pass_no}: "
           f"{p['wall_s']:.3f} s, {len(p['jobs'])} jobs")
-    print("\n".join(render(p["spans"], roots, args.depth, args.min_ms)))
+    print("\n".join(render(p["spans"], roots)))
     return 0
 
 

@@ -56,6 +56,8 @@ def _synthetic_pass():
         _span(6, "plans.exec", 0, 4.0, 9.0, (3, 6), (4, 8), query="q1"),
         _span(7, "workloads.kmeans_pipeline.lloyd_2d", 6, 5.0, 6.0, (4, 5), (5, 6), iterations=1),
     ]
+    for s in spans[4:6]:
+        s.thread = 2  # run_overlapped's pool thread
     jobs = [{"id": i, "t0": 1.0 + i, "t1": 1.5 + i, "stages": [], "status": "SUCCEEDED"} for i in range(6)]
     stages = [
         {"id": i, "status": "COMPLETE", "tasks": 2, "run_ms": 100, "gc_ms": 0,
@@ -88,7 +90,7 @@ def test_printed_metrics_match_contract(contract):
     assert [(k, v["unit"]) for k, v in line["metrics"].items()] == [
         (m["name"], m["unit"]) for m in contract["per_layer"]
     ]
-    e2e = {"setup_s": 1.0, "run_s": 2.0, "op_p50_s": 0.5, "peak_rss_mb": 900.0}
+    e2e = {"setup_s": 1.0, "run_s": 2.0, "cpu_s": 3.0, "op_p50_s": 0.5, "peak_rss_mb": 900.0}
     line = runner.result_line(contract, e2e, False, True, 3, 0)
     assert [(k, v["unit"]) for k, v in line["metrics"].items()] == [
         (m["name"], m["unit"]) for m in contract["end_to_end"]
@@ -162,6 +164,28 @@ def test_self_time_arithmetic():
     assert sum(self_times(seq).values()) == pytest.approx(10.0)
 
 
+def test_self_sum_counts_pool_threads_once():
+    from tracer import span_tree
+
+    # two pool-thread spans under run_overlapped overlap each other;
+    # on the pass's own thread the self times still add up to the wall
+    pool = [_span(2, "streaming.sink", 1, 2.0, 5.0), _span(3, "streaming.sink", 1, 3.0, 6.0)]
+    for s in pool:
+        s.thread = 2
+    spans = [_span(0, "pass", None, 0.0, 10.0), _span(1, "execution.run_overlapped", 0, 1.0, 7.0), *pool]
+    recs = span_tree(spans, [], [])
+    root = recs[0]
+    m, _ = layers.pass_metrics("query_mix", recs, root, [], [], {})
+    assert m["trace.self_sum_frac"] == pytest.approx(1.0)
+    assert m["trace.coverage"] == pytest.approx(0.6)
+    # a main-thread child that overlaps its sibling breaks the sum
+    spans.append(_span(4, "catalog.load_table", 0, 6.5, 8.0))
+    recs = span_tree(spans, [], [])
+    m, _ = layers.pass_metrics("query_mix", recs, recs[0], [], [], {})
+    assert m["trace.self_sum_frac"] == pytest.approx(1.05)
+    assert any("self times" in p for p in runner.trace_problems([m]))
+
+
 def test_layer_metrics_on_synthetic_pass():
     recs, jobs, stages = _synthetic_pass()
     root = next(r for r in recs if r["name"] == "pass")
@@ -178,6 +202,8 @@ def test_layer_metrics_on_synthetic_pass():
     assert m["session.driver_only_s"] == pytest.approx(7.0)
     # root self time is 0.5 (0-0.5) + 1.0 (9-10) of 10 s
     assert m["trace.coverage"] == pytest.approx(0.85)
+    assert m["trace.self_sum_frac"] == pytest.approx(1.0)
+    assert runner.trace_problems([m]) == ["traced pass 0: coverage 0.850 < 0.9"]
     assert "plans.build" not in missing and "functions.vector" in missing
 
 
@@ -196,13 +222,13 @@ def test_wrong_kmeans_output_is_a_failure():
     scores, cents, best = twin
     assert check_sweep(_Res(scores, cents, best), twin) == []
     shifted = {k: c.copy() for k, c in cents.items()}
-    shifted[30][0, 0] += 0.01
+    shifted[50][0, 0] += 0.01
     assert check_sweep(_Res(scores, shifted, best), twin)
     wrong_best = K_GRID[0] if best != K_GRID[0] else K_GRID[1]
     assert check_sweep(_Res(scores, cents, wrong_best), twin)
     # one rounding flip of 0.001 is inside the tolerance
     flipped = {k: c.copy() for k, c in cents.items()}
-    flipped[30][0, 0] += 0.001
+    flipped[50][0, 0] += 0.001
     assert check_sweep(_Res(scores, flipped, best), twin) == []
 
 

@@ -32,12 +32,16 @@ def double_array_lit(values) -> Column:
 def double_array_sql(values) -> str:
     """The SQL text of a (possibly nested) ``array<double>`` literal —
     double_array_lit's renderer, exposed for builders that assemble
-    larger expr strings around the literal (sqdist_sql consumers)."""
-    if isinstance(values, (list, tuple)):
-        return (
-            "array(" + ", ".join(double_array_sql(x) for x in values) + ")"
-        )
-    return f"{float(values)!r}D"
+    larger expr strings around the literal (sqdist_sql consumers).
+    Recursion goes through the private ``_double_sql`` so one literal is
+    one public call."""
+    return _double_sql(values)
+
+
+def _double_sql(v) -> str:
+    if isinstance(v, (list, tuple)):
+        return "array(" + ", ".join(_double_sql(x) for x in v) + ")"
+    return f"{float(v)!r}D"
 
 
 def long_array_lit(values) -> Column:

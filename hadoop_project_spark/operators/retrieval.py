@@ -285,10 +285,11 @@ def hard_negatives_for_anchors(
         # Contract (ADVICE r12 #1): a caller-supplied relation must BE
         # doc_token_sets(docs) for the same corpus, already pinned — a
         # mismatched or unpinned frame silently yields wrong/slow
-        # negatives. The schema is checkable here; provenance remains
-        # the caller's docstring-level promise.
+        # negatives. The schema is checkable here (extra columns are
+        # harmless: only doc_id/ts/n are read); provenance remains the
+        # caller's docstring-level promise.
         expected = {"doc_id", "ts", "n"}
-        if set(sets.columns) != expected:
+        if not expected.issubset(sets.columns):
             raise ValueError(
                 "hard_negatives_for_anchors: `sets` must be the pinned "
                 f"doc_token_sets relation (columns {sorted(expected)}), "

@@ -1,40 +1,38 @@
-"""Count-min sketch heavy hitters: sketch pass -> candidate set ->
-exact verify pass.
+"""Count-min sketch heavy hitters: one fold of the stream into exact
+per-key counts -> sketch grid -> candidate set -> exact verify.
 
-The classic two-pass frequent-items shape for streams/corpora too large
-to hold exact per-key counts (Cormode & Muthukrishnan, J. Algorithms
-2005): pass 1 aggregates the stream into a D x W counter grid (here
-D=4 rows, W=2048 columns — a few KiB of state regardless of input
-size); every key's estimate min_r(cell[r, h_r(key)]) over-counts but
-NEVER under-counts, so thresholding estimates yields a candidate
-superset of the true heavy hitters with zero false negatives. Pass 2
-re-scans the stream restricted to the (small, broadcastable) candidate
-set and keeps exact counts that really clear the threshold.
+cm_heavy_hitters folds the input stream ONCE into a pinned per-key
+count relation (key, c) and derives every pass from it: the D x W
+counter grid (D=4 rows, W=2048 columns; cell[r, h_r(key)] = the sum of
+c over the keys hashing there), the stream total, every key's estimate
+min_r(cell[r, h_r(key)]), and the exact verify, which is a filter on
+the pinned counts themselves. An estimate over-counts but NEVER
+under-counts (Cormode & Muthukrishnan, J. Algorithms 2005), so
+thresholding estimates yields a candidate superset of the true heavy
+hitters with zero false negatives, and the verify keeps only the
+candidates whose exact count clears the threshold. The grid, estimate
+and threshold arithmetic is integer-exact (weighted sums of counts),
+the same values the classic two-scan form computed, but the upstream
+key pipeline runs once instead of once per consumer (4-5 corpus scans).
+The cost is state: the pin holds O(distinct keys), not the classic
+form's few KiB of grid.
 
 That no-false-negative property is what the DuckDB oracle certifies:
 the oracle computes plain exact heavy hitters — if the sketch path
 dropped a true hitter or admitted a light key, the hash would diverge.
 
-Round 13: cm_heavy_hitters folds the input stream ONCE into the
-per-key count relation and derives every pass (sketch grid, totals,
-candidate estimates, exact verify) from that pinned relation — the
-earlier literal two-pass form re-ran the upstream key pipeline once
-per consumer (4-5 corpus scans). The grid/estimate/threshold
-arithmetic is integer-identical (weighted sums of counts); the
-cache is O(distinct keys), the cardinality the old distinct pass
-already paid, not O(corpus).
-
 Hashing is md5-based (functions/text.py module doc: engine-portable,
 unlike F.hash/xxhash64), row-salted as ``md5(r || ':' || key)``.
 
-Scale shape (100 TB): pass 1 is one partial-aggregated groupBy over
-(row, col) — 8192 groups total, so the combiner collapses everything
-map-side and the shuffle is O(partitions * 8192) regardless of key
-cardinality. Pass 2 is a broadcast semi-join (candidate set is bounded
-by W/threshold-headroom) followed by one exact groupBy over candidates
-only. Driver state: none. The reference's word-count-with-combiner
-(WordCount1/src/main/java/WordCount.java:24, SURVEY.md §2 A1) is the
-exact-count special case; this is its bounded-memory scale path.
+Scale shape (100 TB): the fold is one partial-aggregated groupBy over
+the key, so its shuffle and the pin are O(distinct keys) (spilling to
+disk if needed). The grid is one groupBy over (row, col) — 8192 groups
+total, collapsed map-side by the combiner. Each estimate row is a
+broadcast join against one W-row grid row, and the verify is a
+broadcast join of the counts against the candidate set (bounded by
+W/threshold-headroom). Driver state: none. The reference's
+word-count-with-combiner (WordCount1/src/main/java/WordCount.java:24,
+SURVEY.md §2 A1) is the exact-count special case.
 """
 
 from __future__ import annotations

@@ -25,7 +25,14 @@ Stage mapping (SURVEY.md §3.3):
 
 The reference spent ~40 s of MR job setup per iteration (BASELINE.md);
 here the weighted points DF is cached once and each iteration is one
-small aggregation action.
+small aggregation action. That action's fixed cost is plan construction
+on the driver, so each Lloyd and silhouette plan carries its k
+centroids as ONE ``array<array<double>>`` literal rendered by
+functions.vector.double_array_sql and parsed with the expression around
+it in a single F.expr — not ~7 py4j calls per centroid plus a Python
+lambda, which made plan building grow linearly with k. Catalyst folds
+the literal into one Literal node; ``repr`` doubles round-trip, so the
+values are bit-identical to F.lit.
 """
 
 from __future__ import annotations
@@ -34,6 +41,8 @@ import random
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+
+from hadoop_project_spark.functions.vector import double_array_sql
 
 
 @dataclass
@@ -77,24 +86,27 @@ def generate_centroids(k: int, bounds, seed: int) -> list[tuple[float, float]]:
     ]
 
 
-def _assign(points: DataFrame, centroids: list[tuple[float, float]]) -> DataFrame:
-    """Nearest-centroid assignment (KMeans.java:87-111): centroids ride
-    into the plan as a literal struct array (the reference re-read them
-    from HBase in every task's setup, KMeans.java:75-82)."""
-    carr = F.array(*[
-        F.struct(F.lit(i).alias("idx"),
-                 F.lit(la).alias("clat"), F.lit(lo).alias("clon"))
-        for i, (la, lo) in enumerate(centroids)
-    ])
-    scored = F.transform(
-        carr,
-        lambda c: F.struct(
-            ((F.col("lat") - c["clat"]) ** 2 + (F.col("lon") - c["clon"]) ** 2).alias("dist"),
-            c["idx"].alias("idx"),
-        ),
+def _dists_sql(centroids: list[tuple[float, float]]) -> str:
+    """Per-point ``array<double>`` of squared 2-D distances to every
+    centroid (KMeans.java:98; Silhouette.java:88), in centroid order.
+    The centroids are ONE ``array<array<double>>`` literal, so the
+    expression is one parse whatever k is."""
+    return (
+        f"transform({double_array_sql(centroids)}, "
+        "c -> pow(lat - c[0], 2) + pow(lon - c[1], 2))"
     )
-    best = F.array_min(scored)
-    return points.withColumn("idx", best["idx"]).withColumn("dist", best["dist"])
+
+
+def _assign(points: DataFrame, centroids: list[tuple[float, float]]) -> DataFrame:
+    """Nearest-centroid assignment (KMeans.java:87-111) as column
+    ``idx``: the centroids ride into the plan as a literal (the reference
+    re-read them from HBase in every task's setup, KMeans.java:75-82),
+    and the argmin is the FIRST position of the minimum distance, so
+    ties go to the lowest index. A plain double array allocates about a
+    third less per point than (dist, idx) structs."""
+    return points.select("*", F.expr(_dists_sql(centroids)).alias("ds")).select(
+        *points.columns, F.expr("array_position(ds, array_min(ds)) - 1").alias("idx")
+    )
 
 
 def lloyd_2d(
@@ -140,18 +152,12 @@ def silhouette_2d(points: DataFrame, centroids: list[tuple[float, float]]) -> fl
     sentinel result rather than the textbook undefined-at-k=1."""
     if len(centroids) < 2:
         return 1.0
-    carr = F.array(*[
-        F.struct(F.lit(la).alias("clat"), F.lit(lo).alias("clon"))
-        for la, lo in centroids
-    ])
-    dists = F.array_sort(F.transform(
-        carr,
-        lambda c: (F.col("lat") - c["clat"]) ** 2 + (F.col("lon") - c["clon"]) ** 2,
-    ))
-    score = F.when(dists[1] > 0, (dists[1] - dists[0]) / dists[1]).otherwise(F.lit(0.0))
-    row = points.agg(
-        (F.sum(score * F.col("cnt")) / F.sum("cnt")).alias("s")
-    ).first()
+    # sort_array compares natively; array_sort goes through a lambda
+    dists = F.expr(f"sort_array({_dists_sql(centroids)})")
+    row = points.select(dists.alias("d"), "cnt").agg(F.expr(
+        "sum(CASE WHEN d[1] > 0 THEN (d[1] - d[0]) / d[1] ELSE 0.0D END * cnt)"
+        " / sum(cnt)"
+    ).alias("s")).first()
     return float(row["s"])
 
 

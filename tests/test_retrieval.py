@@ -6,6 +6,7 @@ tests; the full pipelines are oracle-hash-verified through the registry
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_project_spark.catalog import load_table
@@ -121,6 +122,30 @@ def test_hard_negatives_exclude_positives_and_rank(spark):
     got = [(r["neighbor_id"], r["score"], r["rank"]) for r in sorted(rows, key=lambda r: r["rank"])]
     # equal scores tie-break on neighbor_id
     assert got == [(2, 3.0 / 7.0, 1), (3, 3.0 / 7.0, 2)]
+
+
+def test_hard_negatives_sets_guard_accepts_superset(spark):
+    """A caller-supplied pinned ``sets`` relation may carry extra
+    columns (only doc_id/ts/n are read) and gives the same negatives; a
+    relation missing one of them is still refused."""
+    from hadoop_project_spark.execution import eager_pin, release_pins
+
+    docs = spark.createDataFrame(
+        [(0, "a b c d e"), (1, "a b c d e"), (2, "a b c x y"), (3, "c d e q r")],
+        "doc_id long, text string",
+    )
+    anchors = spark.createDataFrame([(0,)], "anchor_id long")
+    excl = spark.createDataFrame([(0, 1), (1, 0)], "anchor_id long, other_id long")
+    want = sorted(rt.hard_negatives_for_anchors(docs, anchors, excl, k=5).collect())
+    try:
+        wide = eager_pin(rt.doc_token_sets(docs).withColumn("extra", F.lit(1)))
+        got = rt.hard_negatives_for_anchors(docs, anchors, excl, k=5, sets=wide)
+        assert sorted(got.collect()) == want
+        narrow = eager_pin(rt.doc_token_sets(docs).drop("n"))
+        with pytest.raises(ValueError, match="doc_token_sets relation"):
+            rt.hard_negatives_for_anchors(docs, anchors, excl, k=5, sets=narrow)
+    finally:
+        release_pins()
 
 
 def test_hard_negatives_df_cap_fuses_hot_shingles(spark):

@@ -273,6 +273,20 @@ def test_ivfpq_candidates_subset_of_flat_adc(spark, sf_dir):
             assert f[key] == r["adc_dist"]
 
 
+def test_double_array_sql_renders_fixed_text():
+    """The literal renderer's text is pinned byte-for-byte: every
+    expr-text builder (IVF/PQ, the K-Means sweep) parses exactly this,
+    and ``repr`` is what makes the parsed doubles round-trip."""
+    from hadoop_project_spark.functions.vector import double_array_sql
+
+    assert double_array_sql(0.5) == "0.5D"
+    assert double_array_sql([1, 2.5, -0.1]) == "array(1.0D, 2.5D, -0.1D)"
+    assert double_array_sql([(40.7, -73.95), [1e-05, 3, 0.1 + 0.2]]) == (
+        "array(array(40.7D, -73.95D), array(1e-05D, 3.0D, 0.30000000000000004D))"
+    )
+    assert double_array_sql([[], [[2]]]) == "array(array(), array(array(2.0D)))"
+
+
 def test_sql_text_builders_match_column_reference(spark, sf_dir):
     """The expr-string IVF/PQ builders (one parse instead of py4j
     lambda chains — the r12 build-time optimization) must stay

@@ -1,18 +1,19 @@
-"""Round-12 optimization profiler: per-query wall, per-JOB breakdown,
-and .explain("formatted") capture for the queries being optimized.
+"""Query profiler: per-query wall time, per-JOB breakdown, and
+.explain("formatted") capture for the queries under study.
 
-Usage: python tools/profile_r13.py <tag> <query> [query ...]
-  tag: suffix for the plan files (plans/r13/<query>_<tag>.txt)
+Usage: python tools/profile.py <plans_subdir> <tag> <query> [query ...]
+  plans_subdir: directory under plans/ for the plan files (e.g. r14)
+  tag: suffix for the plan files (plans/<plans_subdir>/<query>_<tag>.txt)
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
 PROFILE_RUNS (default 3).
 
 Each query runs PROFILE_RUNS times (build + noop-sink exec timed
 separately, like bench.py); after the LAST run the job-level timeline
-since the query's start is printed (jobId, duration, description,
-stage shuffle bytes) — this is how build-side work (writes, fits,
-collect barriers) inside end-to-end queries gets attributed, which
-bench.py's single build/exec split cannot see.
+since the query's start is printed (jobId, duration, completed tasks,
+description) — this is how build-side work (writes, fits, collect
+barriers) inside end-to-end queries gets attributed, which bench.py's
+single build/exec split cannot see.
 """
 
 from __future__ import annotations
@@ -23,10 +24,16 @@ import statistics
 import sys
 import time
 import urllib.request
+from datetime import datetime
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# REPLACE the script's own directory (sys.path[0]) with the repo root:
+# left on the path, this file would shadow the stdlib ``profile``
+# module that pyspark imports through cProfile.
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_project_spark.execution import clear_query_state
+
+TS_FMT = "%Y-%m-%dT%H:%M:%S.%f%Z"  # Spark REST timestamps, e.g. ...00.123GMT
 
 
 def _rest(spark, path: str):
@@ -41,8 +48,8 @@ def _rest(spark, path: str):
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    subdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    plan_dir = os.path.join("plans", subdir)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     n_runs = int(os.environ.get("PROFILE_RUNS", "3"))
@@ -51,7 +58,7 @@ def main() -> None:
     from hadoop_project_spark.session import get_spark
 
     spark = get_spark(
-        app_name="hps-profile-r13",
+        app_name="hps-profile",
         cpus=cpus,
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "true"},
@@ -79,7 +86,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    os.makedirs("plans/r13", exist_ok=True)
+    os.makedirs(plan_dir, exist_ok=True)
     for name in names:
         spec = specs[name]
         builds, execs = [], []
@@ -107,7 +114,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(f"plans/r13/{name}_{tag}.txt", "w") as fh:
+        with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
         clear_query_state(spark)
         tot = [b + e for b, e in zip(builds, execs)]
@@ -121,21 +128,18 @@ def main() -> None:
         jobs = [j for j in _rest(spark, "jobs") if j["jobId"] > job_mark]
         jobs.sort(key=lambda j: j["jobId"])
         for j in jobs:
-            dur = j.get("duration_ms")
-            if dur is None:
-                try:
-                    from datetime import datetime
-
-                    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                    dur = (
-                        datetime.strptime(j["completionTime"], fmt)
-                        - datetime.strptime(j["submissionTime"], fmt)
-                    ).total_seconds() * 1000
-                except Exception:  # noqa: BLE001
-                    dur = -1
+            # the REST job payload has no duration field: derive it from
+            # the two timestamps (a running job has no completionTime)
+            try:
+                dur = (
+                    datetime.strptime(j["completionTime"], TS_FMT)
+                    - datetime.strptime(j["submissionTime"], TS_FMT)
+                ).total_seconds()
+            except (KeyError, ValueError):
+                dur = -1.0
             desc = (j.get("description") or j.get("name") or "")[:110]
             print(
-                f"  job {j['jobId']:>4}  {dur/1000:7.2f}s "
+                f"  job {j['jobId']:>4}  {dur:7.2f}s "
                 f" tasks={j.get('numCompletedTasks', '?'):>4}  {desc}",
                 flush=True,
             )
